@@ -172,10 +172,6 @@ object Components {
         prevSum = sumNow
         labels = step
         round += 1
-        // env-guarded round trace: convergence pathologies (the sf10
-        // qC1 non-convergence) are invisible without per-round sums
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          System.err.println(s"[cc] round=$round labelSum=$sumNow")
       }
     } finally edges.unpersist() // also on mid-loop job failure
     val out = vertices.select(col(idCol))

@@ -1,7 +1,8 @@
 package graft.io
 
 /** Scratch-space selection for the single-JVM harness entrypoints
-  * (Bench / Verify / OpBench / PlanAudit / Profile).
+  * (Bench / Verify, and every main built by graft.Session: Probe /
+  * OpBench / AnnEval / Datagen).
   *
   * Spark treats `spark.local.dir` as the fast-ephemeral tier — on a
   * real cluster the cluster manager points it at executor-local NVMe.

@@ -28,14 +28,19 @@ object Sources {
     * schema METADATA, not data or results: every query still computes
     * from the parquet inputs, exactly as a catalog-backed production
     * table (Iceberg/Hive) would — those never infer per query either.
-    * Keyed by absolute path; files are fixed for a JVM's lifetime
-    * (testdata regeneration always comes with a fresh driver JVM). */
+    * Keyed by (absolute path, length, mtime): a table rewritten in the
+    * same JVM (Datagen, staging, a spec) gets a fresh key, so its next
+    * read infers the new schema instead of reusing the old one. */
+  private final case class FileKey(path: String, length: Long, mtime: Long)
+
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
+    new java.util.concurrent.ConcurrentHashMap[FileKey,
       org.apache.spark.sql.types.StructType]()
 
   private def readCached(spark: SparkSession, path: String): DataFrame = {
-    val schema = schemaCache.computeIfAbsent(path,
+    val f = new java.io.File(path).getAbsoluteFile
+    val schema = schemaCache.computeIfAbsent(
+      FileKey(f.getPath, f.length, f.lastModified),
       _ => spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
@@ -55,8 +60,8 @@ object Sources {
       //  - timestamp[us] with isAdjustedToUTC=false: Spark 4 infers
       //    TIMESTAMP_NTZ, on which unix_micros/interval arithmetic fails
       //    analysis. Cast NTZ→LTZ: with the session TZ pinned UTC in
-      //    every entrypoint (Verify/Bench/Profile/OpBench/PlanAudit/
-      //    specs) the cast is wall-clock-identity, matching DuckDB
+      //    every entrypoint (Verify/Bench/graft.Session/specs) the
+      //    cast is wall-clock-identity, matching DuckDB
       //    reading the same naive parquet under UTC.
       // nanosAsLong must be set BEFORE the (first, memoized) schema
       // inference so a ns-encoded ts infers as LongType instead of

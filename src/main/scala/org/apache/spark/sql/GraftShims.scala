@@ -88,6 +88,13 @@ object GraftShims {
     }
   }
 
+  /** Block until every event posted so far has been delivered to
+    * every listener. `SparkContext.listenerBus` is private[spark];
+    * task-end events arrive after the action returns, so a listener
+    * read before this drain under-counts. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Test seam: apply an extensions object's injected functions to a
     * registry (what session construction does internally) so specs
     * can assert the injection wiring without building a session. */

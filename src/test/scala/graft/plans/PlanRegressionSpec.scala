@@ -1,17 +1,14 @@
 package graft.plans
 
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.execution.joins.CartesianProductExec
-
-import graft.{SparkEntry, SparkSpec}
+import graft.{Probe, SparkEntry, SparkSpec}
 
 /** Plan-regression gate (round 8): PLANS.md is regenerated by hand,
   * so nothing used to fail if a query silently gained an exchange or
-  * lost a pushed parquet filter. This spec pins the PlanAudit counts
-  * (shuffle exchanges, parquet scans, scans with pushed filters) for
-  * the heaviest + most recently rewritten queries against committed
-  * expectations, under the same config PlanAudit uses (AQE initial
+  * lost a pushed parquet filter. This spec pins the `graft.Probe plans`
+  * counts (shuffle exchanges, parquet scans, scans with pushed
+  * filters), read by the same Probe.planShape, for the heaviest +
+  * most recently rewritten queries against committed expectations,
+  * under the same config `Probe plans` uses (AQE initial
   * plan, 4 shuffle partitions) — red on ANY drift, in either
   * direction: a new exchange is a scale regression, a vanished one
   * means the committed envelope is stale and must be re-pinned
@@ -89,27 +86,20 @@ class PlanRegressionSpec extends SparkSpec {
     "qF3_split_leakage" -> ((4, 2, 0))
   )
 
-  private def audit(name: String): (Int, Int, Int, Int) = {
+  private def audit(name: String): Probe.PlanShape = {
     val adaptiveWas = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val plan = SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.executedPlan
-      val exchanges = plan.collect { case e: ShuffleExchangeLike => e }.size
-      val scans = plan.collect { case f: FileSourceScanExec => f }
-      val pushed = scans.count(
-        _.metadata.get("PushedFilters").exists(_ != "[]"))
-      val cartesian = plan.collect { case c: CartesianProductExec => c }.size
-      (exchanges, scans.size, pushed, cartesian)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", adaptiveWas)
+    try Probe.planShape(SparkEntry.queries(name)(spark, sfDir)
+      .queryExecution.executedPlan)
+    finally spark.conf.set("spark.sql.adaptive.enabled", adaptiveWas)
   }
 
   expected.toSeq.sortBy(_._1).foreach { case (name, (exp, escan, epush)) =>
     test(s"$name plan shape is pinned: $exp exchanges, $escan scans, $epush pushed") {
-      val (exchanges, scans, pushed, cartesian) = audit(name)
+      val Probe.PlanShape(exchanges, _, scans, pushed, _, cartesian) = audit(name)
       assert(exchanges === exp,
         s"$name exchange count drifted (got $exchanges, pinned $exp): " +
-          "re-run graft.PlanAudit, inspect the diff, and re-pin deliberately")
+          "re-run graft.Probe plans, inspect the diff, and re-pin deliberately")
       assert(scans === escan, s"$name parquet scan count drifted")
       assert(pushed === epush,
         s"$name pushed-filter scan count drifted — a filter stopped " +

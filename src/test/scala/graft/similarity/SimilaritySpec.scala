@@ -203,8 +203,9 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("int8 margin property: recall@10 = 1.0 when neighbor gaps exceed the 8-bit step") {
-    // VERDICT r14 item 6: AnnMarginEval's sf10 measurement (recall
-    // 1.000 over 199,991 vectors) gets a permanent regression tripwire
+    // VERDICT r14 item 6: the sf10 margin measurement (recall 1.000
+    // over 199,991 vectors, ANN_EVAL_SF10.json method int8_dot_margin)
+    // gets a permanent regression tripwire
     // at test scale — the SAME corpus geometry, shrunk. Dense-sign
     // vectors: element d of a cluster-c vector is ±10 (sign = parity
     // of an md5 nibble of "c_d" — hash-derived, not affine) plus
@@ -222,7 +223,7 @@ class SimilaritySpec extends SparkSpec {
       val md = java.security.MessageDigest.getInstance("MD5")
         .digest(s"${cl}_$d".getBytes("UTF-8"))
       // parity of the leading 8 hex chars as an integer — the same
-      // conv(substring(md5,1,8),16,10) % 2 AnnMarginEval computes
+      // conv(substring(md5,1,8),16,10) % 2 the sf10 corpus used
       val h = java.lang.Long.parseLong(
         md.take(4).map(b => f"${b & 0xff}%02x").mkString, 16)
       if (h % 2 == 0) 10.0f else -10.0f

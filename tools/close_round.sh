@@ -16,8 +16,8 @@
 #          sf1       Verify + check_oracles at tmp/sf1     (SLOW: ~80 min)
 #          sf10     wave-partitioned oracle sweep at tmp/sf10 against
 #                    tmp/v_sf10 engine outputs (SLOW: hours; see below)
-#          bench     graft.Bench ×2 at sf0.1               (2 JSON lines)
-#          plans     PlanAudit regen + git diff check      (0 drift)
+#          bench     graft.Bench ×2 at sf0.1, local[nproc] (2 JSON lines)
+#          plans     graft.Probe plans regen + git diff    (0 drift)
 #
 # sf1/sf10 are NOT in the default list (they dominate wall time); the
 # full close is:
@@ -279,7 +279,7 @@ if has_step bench; then
   # every round). BENCH_FULL.json now belongs to the driver alone.
   for i in 1 2; do
     note "bench run $i at sf0.1…"
-    SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+    SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS="$(nproc)" \
     SPARK_GRAFT_BENCH_OUT="$OUT/bench$i.full.json" \
       tools/run_main.sh graft.Bench >"$OUT/bench$i.log" 2>&1
     line=$(grep -F '"metric":"total"' "$OUT/bench$i.log" | tail -1)
@@ -300,8 +300,8 @@ if has_step bench; then
 fi
 
 if has_step plans; then
-  note "PlanAudit regen…"
-  tools/run_main.sh graft.PlanAudit /root/testdata/sf0.01 PLANS.md \
+  note "plans regen…"
+  tools/run_main.sh graft.Probe plans /root/testdata/sf0.01 PLANS.md \
     >"$OUT/plans.log" 2>&1
   if git diff --quiet -- PLANS.md; then
     SUMMARY+=("plans: PLANS.md byte-identical (no plan drift)")
